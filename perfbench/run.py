@@ -1,6 +1,6 @@
 """Performance benchmark of deepdb_public_spark.
 
-    python3 perfbench/run.py --workload estimate --seed 1 --seconds 4 --trace 0
+    python3 perfbench/run.py --workload estimate --seed 1 --seconds 2 --trace 0
 
 Runs one workload (``estimate`` or ``curate``, see README.md) in a
 single Python process on a ``local[nproc]`` Spark session sized from
@@ -24,7 +24,6 @@ import argparse
 import hashlib
 import json
 import os
-import resource
 import statistics
 import subprocess
 import sys
@@ -36,6 +35,7 @@ sys.path.insert(0, HERE)
 
 import datagen  # noqa: E402
 import oracle  # noqa: E402
+import speed  # noqa: E402
 import stream  # noqa: E402
 import workloads  # noqa: E402
 from spans import NullTracer, Tracer, free_port  # noqa: E402
@@ -44,16 +44,17 @@ from spans import NullTracer, Tracer, free_port  # noqa: E402
 SCALES = {
     "bench": {
         "sf": 0.02, "n_docs": 300, "n_vecs": 300, "sample_budget": 5_000,
-        "setup_reps_estimate": 2, "setup_reps_curate": 2, "measured_requests": 3000, "exact_queries": 6,
+        "setup_reps": 3, "measured_requests": 8000, "exact_queries": 6,
     },
     "smoke": {
         "sf": 0.001, "n_docs": 120, "n_vecs": 120, "sample_budget": 2_000,
-        "setup_reps_estimate": 1, "setup_reps_curate": 1, "measured_requests": 300, "exact_queries": 2,
+        "setup_reps": 1, "measured_requests": 300, "exact_queries": 2,
     },
 }
 WORKLOADS = ("estimate", "curate")
 END_TO_END = {
     "setup_s": "s",
+    "op_cpu_ms_norm": "ms",
     "peak_rss_mb": "MB",
     "qerror_p50": "ratio",
     "qerror_p95": "ratio",
@@ -122,6 +123,9 @@ def make_session(host: dict, work: str, trace: bool):
         .config("spark.local.dir", os.path.join(work, "spark-local"))
         .config("spark.sql.warehouse.dir", os.path.join(work, "spark-warehouse"))
         .config("spark.ui.showConsoleProgress", "false")
+        # a fixed heap and young generation, so G1 sizes neither from its
+        # pause times and the JVM's peak RSS does not follow the host's speed
+        .config("spark.driver.extraJavaOptions", f"-Xms{mem_mb}m -Xmn{mem_mb // 5}m")
     )
     port = None
     if trace:
@@ -141,16 +145,28 @@ def make_session(host: dict, work: str, trace: bool):
     return spark, port
 
 
-def peak_rss_mb(spark) -> float:
-    """Peak resident memory of this Python process plus the JVM."""
-    py_kb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
-    jvm_pid = spark.sparkContext._jvm.ProcessHandle.current().pid()
-    jvm_kb = 0
-    with open(f"/proc/{jvm_pid}/status") as f:
+def vm_hwm_kb(pid="self") -> int:
+    """Peak resident memory of a process since it started or since
+    ``reset_peak_rss``."""
+    with open(f"/proc/{pid}/status") as f:
         for line in f:
             if line.startswith("VmHWM:"):
-                jvm_kb = int(line.split()[1])
-    return (py_kb + jvm_kb) / 1024
+                return int(line.split()[1])
+    return 0
+
+
+def reset_peak_rss() -> None:
+    """Restart this process's peak-RSS count from its current RSS, so
+    the harness's own generation and oracle work before the session
+    does not count."""
+    with open("/proc/self/clear_refs", "w") as f:
+        f.write("5")
+
+
+def peak_rss_mb(spark) -> dict:
+    """Peak resident memory of this Python process and of the JVM."""
+    jvm_pid = spark.sparkContext._jvm.ProcessHandle.current().pid()
+    return {"python": vm_hwm_kb() / 1024, "jvm": vm_hwm_kb(jvm_pid) / 1024}
 
 
 def stop_session(spark) -> None:
@@ -173,27 +189,29 @@ def stop_session(spark) -> None:
                 proc.wait()
 
 
-def prepare(scale: dict, work: str):
-    """Tables, DuckDB connection, request domains and registry oracles
-    for this scale; everything slow is cached under ``work``."""
+def prepare(scale: dict, work: str, workload: str):
+    """Tables, DuckDB connection, request domains and (for ``curate``)
+    registry oracles for this scale; everything slow is cached under
+    ``work``."""
     import __spark_entry__
 
     data = datagen.ensure_data(work, scale["sf"], scale["n_docs"], scale["n_vecs"])
     duck = oracle.connect(data, os.path.join(work, "tmp"))
     templates = stream.load_templates(ROOT)
     domains = oracle.domains(duck, stream.range_columns(templates))
-    registry = __spark_entry__.oracle_sql()
-    oracles = {
-        name: oracle.registry_oracle(duck, name, registry[name], data)
-        for name in workloads.REGISTRY_ORACLES
-    }
+    oracles = {}
+    if workload == "curate":
+        registry = __spark_entry__.oracle_sql()
+        oracles = {
+            name: oracle.registry_oracle(duck, name, registry[name], data)
+            for name in workloads.REGISTRY_ORACLES
+        }
     return data, duck, templates, domains, oracles
 
 
 def op_stats(run) -> dict:
-    """Cost of the timed operation: CPU time (mean, p90) and wall time
-    (p50, p90), in ms. Recorded every run; bounded by no gate, because
-    the development host's per-process CPU speed varied by 1.7x."""
+    """Cost of the timed operation as measured, before normalization:
+    CPU time (mean, p90) and wall time (p50, p90), in ms."""
     cpu_ms = [x * 1e3 for x in run.op_cpu_s]
     wall_ms = [x * 1e3 for x in run.op_s]
     return {
@@ -202,13 +220,15 @@ def op_stats(run) -> dict:
         "cpu_ms_p90": workloads.pct(cpu_ms, 90),
         "wall_ms_p50": workloads.pct(wall_ms, 50),
         "wall_ms_p90": workloads.pct(wall_ms, 90),
+        "cpu_ms_norm": run.op_cpu_ms_norm,
     }
 
 
-def metrics_of(run, rss_mb: float) -> dict:
+def metrics_of(run) -> dict:
     values = {
         "setup_s": statistics.median(run.setup_s),
-        "peak_rss_mb": rss_mb,
+        "op_cpu_ms_norm": run.op_cpu_ms_norm,
+        "peak_rss_mb": sum(run.peak_rss_mb.values()),
         "qerror_p50": workloads.pct(run.qerrors, 50),
         "qerror_p95": workloads.pct(run.qerrors, 95),
     }
@@ -246,7 +266,8 @@ def main(argv=None) -> int:
     os.environ["TMPDIR"] = os.path.join(work, "tmp")
     os.environ["JAVA_TOOL_OPTIONS"] = f"-XX:-UsePerfData -Djava.io.tmpdir={work}/tmp"
     scale = SCALES[args.scale]
-    data, duck, templates, domains, oracles = prepare(scale, work)
+    data, duck, templates, domains, oracles = prepare(scale, work, args.workload)
+    reset_peak_rss()
 
     host = host_record()
     record = {
@@ -259,24 +280,27 @@ def main(argv=None) -> int:
     spark, port = make_session(host, work, bool(args.trace))
     try:
         tracer = Tracer(spark.sparkContext, port) if args.trace else NullTracer()
-        ctx = workloads.Ctx(spark, tracer, data, duck, args.seed, args.seconds, scale, templates, domains)
+        ctx = workloads.Ctx(spark, tracer, data, duck, args.seed, args.seconds, scale, templates, domains,
+                            speed.Sampler(), lambda: peak_rss_mb(spark))
         if args.workload == "estimate":
             run = workloads.run_estimate(ctx)
         else:
             run = workloads.run_curate(ctx, oracles)
-        rss = peak_rss_mb(spark)
         if args.trace:
             tracer.dump(os.path.join(work, "traces", f"{args.workload}-seed{args.seed}.json"))
     finally:
         stop_session(spark)
     wall = time.perf_counter() - t_start
     record["host"]["load1_after"] = load1()
-    record["inputs"] = {**run.inputs, "setup_s_reps": [round(x, 3) for x in run.setup_s]}
+    record["inputs"] = run.inputs
+    record["setup"] = {"s": run.setup_s, "raw_s": run.setup_raw_s}
+    record["slowdown"] = run.slowdown
+    record["peak_rss_mb"] = run.peak_rss_mb
     record["op"] = ops = op_stats(run)
     run.layers["op.cpu_ms_mean"], run.layers["op.cpu_ms_p90"] = ops["cpu_ms_mean"], ops["cpu_ms_p90"]
     record["wall_s"] = round(wall, 3)
     record["problems"] = run.problems
-    metrics = layer_metrics(run) if args.trace else metrics_of(run, rss)
+    metrics = layer_metrics(run) if args.trace else metrics_of(run)
     correct = run.failed == 0 and run.attempted > 0
     result = {"correct": correct, "attempted": run.attempted, "failed": run.failed, "metrics": metrics}
     record["result"] = result

@@ -64,6 +64,7 @@ class Tracer:
         self.self_s = 0.0  # time spent in the tracer's own bookkeeping
         self.jobs_by_group: dict[str, list[dict]] = {}
         self.stages: dict[int, list[dict]] = {}
+        self.execution_of_job: dict[int, int] = {}
 
     @contextmanager
     def span(self, name: str):
@@ -115,6 +116,15 @@ class Tracer:
         for st in stages:
             if st.get("status") in ("COMPLETE", "FAILED"):
                 self.stages.setdefault(st["stageId"], []).append(st)
+        # a DataFrame action is one SQL execution; with adaptive query
+        # execution on, it submits one job per shuffle map stage besides
+        # its result job, so jobs overcount actions
+        self.execution_of_job = {
+            j: ex["id"]
+            for ex in self._get("/sql?details=false&offset=0&length=1000000")
+            for key in ("successJobIds", "failedJobIds", "runningJobIds")
+            for j in ex.get(key, [])
+        }
 
     # -- attribution ---------------------------------------------------
     def descendants(self, sp: Span) -> list[int]:
@@ -132,7 +142,11 @@ class Tracer:
         jobs = [j for sid in self.descendants(sp) for j in self.jobs_by_group.get(f"span-{sid}", [])]
         stage_ids = {sid for j in jobs for sid in j.get("stageIds", [])}
         stages = [st for sid in stage_ids for st in self.stages.get(sid, [])]
-        out = {"spark.jobs": float(len(jobs)), "spark.stages": float(len(stages))}
+        out = {
+            "spark.jobs": float(len(jobs)),
+            "spark.actions": float(len({self.execution_of_job.get(j["jobId"], -1 - j["jobId"]) for j in jobs})),
+            "spark.stages": float(len(stages)),
+        }
         for name, field in STAGE_SUMS.items():
             out[name] = float(sum(s.get(field, 0) or 0 for s in stages))
         out["spark.executor_cpu_ms"] /= 1e6  # the UI reports nanoseconds

@@ -14,6 +14,7 @@ import json
 import os
 import subprocess
 import sys
+import time
 
 import pytest
 
@@ -22,6 +23,7 @@ BENCH = os.path.dirname(HERE)
 ROOT = os.path.dirname(BENCH)
 sys.path.insert(0, BENCH)
 
+import speed  # noqa: E402
 import stream  # noqa: E402
 
 DOMAINS = {
@@ -68,6 +70,18 @@ def test_every_template_is_count_or_aqp():
     templates = stream.load_templates(ROOT)
     n_count = sum(stream.is_count(t) for t in templates)
     assert 0 < n_count < len(templates)
+
+
+def test_slowdown_is_relative_to_the_reference():
+    assert speed.slowdown([]) == 1.0
+    assert speed.slowdown([speed.SPIN_REF_S, 3 * speed.SPIN_REF_S]) == pytest.approx(2.0)
+    sampler = speed.Sampler(period_s=0.001)
+    with sampler.window():
+        time.sleep(0.05)
+    n = len(sampler.samples)
+    time.sleep(0.01)
+    assert n > 0 and len(sampler.samples) == n  # the window closed its thread
+    assert sampler.slowdown(0.0, time.perf_counter()) > 0
 
 
 def _metric_names(section: str) -> set[str]:

@@ -22,6 +22,7 @@ from dataclasses import dataclass, field
 import numpy as np
 
 import oracle
+import speed
 import stream
 
 # the lineitem model and the orders-lineitem FK-pair model, which also
@@ -31,6 +32,7 @@ QERROR_SUBSET = 150  # distinct COUNT requests checked against DuckDB
 AQP_SUBSET = 30  # distinct AQP requests checked against DuckDB
 CI_SUBSET = 20  # distinct requests whose confidence interval is checked
 READS_PER_DELTA = 20  # estimate requests sent after each delta
+SPIN_EVERY = 10  # measured estimate requests between two interleaved spins
 REGISTRY_ORACLES = [
     "x06_minhash_pairs", "x20_dup_clusters", "x30_gopher_flags",
     "x56_bigram_logprob", "x57_curate_corpus",
@@ -48,12 +50,13 @@ PER_LAYER = {
     "ensemble.aqp_ms_p50": "ms", "ensemble.aqp_ms_p99": "ms", "ensemble.aqp_relerr_p50": "ratio",
     "engine.model_answered_share": "ratio", "engine.fallback_ms_p50": "ms",
     "compiler.compile_ms_p50": "ms",
-    "spark.jobs": "count", "spark.stages": "count", "spark.tasks": "count",
+    "spark.jobs": "count", "spark.actions": "count", "spark.stages": "count", "spark.tasks": "count",
     "spark.executor_run_ms": "ms", "spark.executor_cpu_ms": "ms",
     "spark.shuffle_read_bytes": "bytes", "spark.shuffle_write_bytes": "bytes",
     "spark.spill_bytes": "bytes", "spark.result_bytes": "bytes", "spark.driver_ms": "ms",
     "incremental.absorb_ms_p50": "ms", "incremental.remove_ms_p50": "ms",
     "incremental.update_ms_p50": "ms", "incremental.jobs_per_delta": "count",
+    "incremental.actions_per_delta": "count",
     "incremental.read_ms_p50": "ms", "incremental.qerror_drift": "ratio",
     "exact.query_ms_p50": "ms",
     **{f"{s}_s": "s" for s in CURATE_STEPS},
@@ -67,7 +70,11 @@ PER_LAYER = {
 class Run:
     op_s: list[float] = field(default_factory=list)  # wall time per timed operation
     op_cpu_s: list[float] = field(default_factory=list)  # CPU time per timed operation
-    setup_s: list[float] = field(default_factory=list)
+    op_cpu_ms_norm: float = 0.0  # CPU ms per timed operation at the reference speed
+    setup_s: list[float] = field(default_factory=list)  # per set-up, at the reference speed
+    setup_raw_s: list[float] = field(default_factory=list)  # per set-up, as measured
+    slowdown: dict = field(default_factory=dict)  # host slow-down seen by each measurement
+    peak_rss_mb: dict = field(default_factory=dict)  # peak RSS in MB, per process
     qerrors: list[float] = field(default_factory=list)
     attempted: int = 0
     failed: int = 0
@@ -92,6 +99,8 @@ class Ctx:
     scale: dict
     templates: list
     domains: dict
+    sampler: speed.Sampler
+    peak_rss_mb: object  # () -> dict, read after the program's work and before the checks
 
 
 # -- helpers ----------------------------------------------------------
@@ -181,6 +190,26 @@ def _load_engine(ctx: Ctx):
         return Engine(ctx.spark, ctx.data_dir)
 
 
+def _set_up(ctx: Ctx, run: Run, once):
+    """Calls ``once`` ``setup_reps`` times and times each call. The wall
+    time is normalized by the host's slow-down during the call and by
+    the share of CPU time the hypervisor gave to other tenants, which
+    lengthens wall time but not the spins' CPU time. Returns the last
+    call's result."""
+    slow, steal = [], []
+    for _ in range(ctx.scale["setup_reps"]):
+        with ctx.sampler.window():
+            t0, s0 = time.perf_counter(), speed.steal_ticks()
+            out = once()
+            t1, s1 = time.perf_counter(), speed.steal_ticks()
+        slow.append(ctx.sampler.slowdown(t0, t1))
+        steal.append(speed.steal_share(s0, s1))
+        run.setup_raw_s.append(t1 - t0)
+        run.setup_s.append((t1 - t0) * (1 - steal[-1]) / slow[-1])
+    run.slowdown["setup"], run.slowdown["setup_steal"] = slow, steal
+    return out
+
+
 # -- estimate ---------------------------------------------------------
 def _estimate_request(ctx: Ctx, eng, sql: str, op: str = "request"):
     """One estimate request. Untraced it is exactly Engine.estimate;
@@ -219,23 +248,17 @@ def _train(ctx: Ctx, eng, table_sets) -> object:
     return ens
 
 
-def _count_qerrors(ctx: Ctx, eng, queries: list[str], truth: dict) -> list[float]:
-    out = []
-    for q in queries:
-        if q not in truth:
-            truth[q] = oracle.count_truth(ctx.duck, q)
-        out.append(qerror(eng.ensemble.answer(eng.parse(q)), truth[q]))
-    return out
+def _model_answers(eng, queries: list[str]) -> list:
+    return [eng.ensemble.answer(eng.parse(q)) for q in queries]
 
 
-def _aqp_relerrs(ctx: Ctx, eng, queries: list[str]) -> list[float]:
+def _aqp_relerrs(duck, queries: list[str], answers: list) -> list[float]:
     """Relative error of every AQP output cell whose group the model
     also returned."""
     errs = []
-    for q in queries:
-        est = eng.ensemble.answer(eng.parse(q))
+    for q, est in zip(queries, answers):
         width = oracle.group_width(q)
-        ref = {tuple(map(str, r[:width])): r[width:] for r in oracle.reference_rows(ctx.duck, q)}
+        ref = {tuple(map(str, r[:width])): r[width:] for r in oracle.reference_rows(duck, q)}
         for row in est:
             vals = list(row.values())
             key = tuple(map(str, vals[:width]))
@@ -277,22 +300,26 @@ def run_estimate(ctx: Ctx) -> Run:
     applies the seeded deltas to the lineitem model, with reads after
     each, and the q-error is measured once the deltas have netted out.
     Last, an exact-plane phase runs seeded requests over the full
-    corpus through Engine.query."""
+    corpus through Engine.query. Every answer is kept, and compared
+    with DuckDB only after the peak memory has been read."""
     from deepdb_public_spark.spn.incremental import absorb_delta, remove_delta, update_delta
 
     tr, run = ctx.tracer, Run()
-    for _ in range(ctx.scale["setup_reps_estimate"]):
-        t0 = time.perf_counter()
+
+    def once():
         eng = _load_engine(ctx)
         eng.ensemble = _train(ctx, eng, ENSEMBLE)
-        run.setup_s.append(time.perf_counter() - t0)
+        return eng
+
+    eng = _set_up(ctx, run, once)
 
     covered = set().union(*ENSEMBLE)
     templates = [t for t in ctx.templates if stream.tables_of(t) <= covered]
     reqs = stream.QueryStream(templates, ctx.domains, ctx.seed)
-    issued, answers, model_answered = [], [], 0
+    n = ctx.scale["measured_requests"]
+    issued, answers, spins, model_answered = [], [], [], 0
     deadline = time.perf_counter() + ctx.seconds
-    while time.perf_counter() < deadline or len(issued) < ctx.scale["measured_requests"]:
+    while time.perf_counter() < deadline or len(issued) < n:
         q = next(reqs)
         t0, c0 = time.perf_counter(), time.thread_time()
         try:
@@ -305,19 +332,21 @@ def run_estimate(ctx: Ctx) -> Run:
         issued.append(q)
         answers.append(ans)
         model_answered += by_model
-    # latency over a fixed prefix of the seeded stream: later requests
+        if len(issued) <= n and len(issued) % SPIN_EVERY == 0:
+            spins.append(speed.spin())
+    # cost over a fixed prefix of the seeded stream: later requests
     # repeat earlier ones more often and hit the models' caches, so a
     # time-bounded sample would get cheaper the faster the host ran
-    n = ctx.scale["measured_requests"]
     run.op_s, run.op_cpu_s = run.op_s[:n], run.op_cpu_s[:n]
+    run.slowdown["op"] = [speed.slowdown(spins)]
+    run.op_cpu_ms_norm = statistics.fmean(run.op_cpu_s) * 1e3 / run.slowdown["op"][0]
     run.attempted += len(issued)
     for q, a in zip(issued, answers):
         if a is not None and not _answer_ok(a):
             run.fail(f"invalid estimate {a!r}: {q}")
 
     count_qs = stream.distinct_prefix(issued[:n], QERROR_SUBSET, want_count=True)
-    truth: dict[str, int] = {}
-    before = _count_qerrors(ctx, eng, count_qs, truth)
+    est_before = _model_answers(eng, count_qs)
 
     # write phase: seeded deltas on the single-table lineitem model;
     # join models take deltas only in their joined relation, so they
@@ -355,11 +384,21 @@ def run_estimate(ctx: Ctx) -> Run:
                 run.fail(f"estimate after {step['role']} raised {type(e).__name__}: {e}: {q}")
             read_ms.append((time.perf_counter() - t0) * 1e3)
 
-    run.qerrors = _count_qerrors(ctx, eng, count_qs, truth)
+    est_after = _model_answers(eng, count_qs)
     aqp_qs = stream.distinct_prefix(issued[:n], AQP_SUBSET, want_count=False)
-    relerrs = _aqp_relerrs(ctx, eng, aqp_qs)
+    aqp_answers = _model_answers(eng, aqp_qs)
     _check_cis(eng, count_qs[: CI_SUBSET // 2] + aqp_qs[: CI_SUBSET // 2], run)
-    exact = _exact_phase(ctx, eng, run)
+    exact_rows, exact = _exact_phase(ctx, eng, run)
+    run.peak_rss_mb = ctx.peak_rss_mb()
+
+    # DuckDB from here on
+    truth = [oracle.count_truth(ctx.duck, q) for q in count_qs]
+    before = [qerror(e, t) for e, t in zip(est_before, truth)]
+    run.qerrors = [qerror(e, t) for e, t in zip(est_after, truth)]
+    relerrs = _aqp_relerrs(ctx.duck, aqp_qs, aqp_answers)
+    for q, rows in exact_rows:
+        if not oracle.rows_match(rows, oracle.reference_rows(ctx.duck, q)):
+            run.fail(f"exact result differs from DuckDB: {q}")
 
     run.inputs = {
         "templates": len(templates),
@@ -376,6 +415,7 @@ def run_estimate(ctx: Ctx) -> Run:
         tr.collect()
         lay = _common_layers(tr, "request", "exact.query", len(issued))
         trains = [s for s in tr.spans if s.name == "trainer.train"]
+        deltas = [s for s in tr.spans if s.name.startswith("incremental.")]
         lay.update({
             "trainer.train_s": statistics.median((s.end - s.start) for s in trains),
             "trainer.spark_jobs": statistics.median(tr.spark_counters(s)["spark.jobs"] for s in trains),
@@ -391,9 +431,8 @@ def run_estimate(ctx: Ctx) -> Run:
             "incremental.absorb_ms_p50": pct(_span_ms(tr, "incremental.absorb"), 50),
             "incremental.remove_ms_p50": pct(_span_ms(tr, "incremental.remove"), 50),
             "incremental.update_ms_p50": pct(_span_ms(tr, "incremental.update"), 50),
-            "incremental.jobs_per_delta": statistics.mean(
-                tr.spark_counters(s)["spark.jobs"] for s in tr.spans if s.name.startswith("incremental.")
-            ),
+            "incremental.jobs_per_delta": statistics.mean(tr.spark_counters(s)["spark.jobs"] for s in deltas),
+            "incremental.actions_per_delta": statistics.mean(tr.spark_counters(s)["spark.actions"] for s in deltas),
             "incremental.read_ms_p50": pct(read_ms, 50),
             "incremental.qerror_drift": pct(run.qerrors, 95) / max(pct(before, 95), 1e-9),
             "exact.query_ms_p50": pct(_span_ms(tr, "exact.query"), 50),
@@ -417,12 +456,12 @@ def _exact_request(ctx: Ctx, eng, sql: str) -> list[tuple]:
             return [tuple(r) for r in df.collect()]
 
 
-def _exact_phase(ctx: Ctx, eng, run: Run) -> dict:
+def _exact_phase(ctx: Ctx, eng, run: Run) -> tuple[list, dict]:
     """The exact plane on the full corpus: seeded requests over all
-    templates (1- to 5-way joins) through Engine.query(q).collect(),
-    each result compared with DuckDB."""
+    templates (1- to 5-way joins) through Engine.query(q).collect().
+    Returns each request with its rows, for the DuckDB comparison."""
     reqs = stream.QueryStream(ctx.templates, ctx.domains, ctx.seed)
-    issued, ms = [], []
+    results, ms = [], []
     for _ in range(ctx.scale["exact_queries"]):
         q = next(reqs)
         run.attempted += 1
@@ -433,10 +472,9 @@ def _exact_phase(ctx: Ctx, eng, run: Run) -> dict:
             run.fail(f"exact query raised {type(e).__name__}: {e}: {q}")
             continue
         ms.append((time.perf_counter() - t0) * 1e3)
-        issued.append(q)
-        if not oracle.rows_match(rows, oracle.reference_rows(ctx.duck, q)):
-            run.fail(f"exact result differs from DuckDB: {q}")
-    return {"stream": stream.describe(issued), "query_ms": [round(x, 3) for x in ms]}
+        results.append((q, rows))
+    record = {"stream": stream.describe([q for q, _r in results]), "query_ms": [round(x, 3) for x in ms]}
+    return results, record
 
 
 # -- curate -----------------------------------------------------------
@@ -563,29 +601,39 @@ def run_curate(ctx: Ctx, oracles: dict) -> Run:
     tr, run = ctx.tracer, Run()
     n_docs, n_vecs = ctx.scale["n_docs"], ctx.scale["n_vecs"]
     inputs = stream.curate_inputs(ctx.seed, n_docs, n_vecs)
-    for _ in range(ctx.scale["setup_reps_curate"]):
-        t0 = time.perf_counter()
+
+    def once():
         eng = _load_engine(ctx)
         docs = eng.catalog["documents"]
         with tr.span("dedup.build_minhash_index"):
             bands, sets = dedup.build_minhash_index(
                 docs.filter(~F.col("doc_id").isin(inputs["held_out"])), "text", "doc_id",
                 n_hashes=64, n_bands=16, use_char_ngrams=True, ngram=5)
-            index = (bands.localCheckpoint(), sets.localCheckpoint())
-        run.setup_s.append(time.perf_counter() - t0)
+            return eng, (bands.localCheckpoint(), sets.localCheckpoint())
 
-    outs = []
+    eng, index = _set_up(ctx, run, once)
+
+    outs, norm_cpu_ms = [], []
     deadline = time.perf_counter() + ctx.seconds
-    while time.perf_counter() < deadline or not run.op_s:
-        t0, c0 = time.perf_counter(), tree_cpu_s()
-        try:
-            with tr.span("pass"):
-                outs.append(_curate_pass(ctx, eng, index, inputs))
-        except Exception as e:
-            run.fail(f"curation pass raised {type(e).__name__}: {e}")
-            run.attempted += 1
-        run.op_cpu_s.append(tree_cpu_s() - c0)
-        run.op_s.append(time.perf_counter() - t0)
+    with ctx.sampler.window():
+        while time.perf_counter() < deadline or not run.op_s:
+            t0, c0 = time.perf_counter(), tree_cpu_s()
+            try:
+                with tr.span("pass"):
+                    outs.append(_curate_pass(ctx, eng, index, inputs))
+            except Exception as e:
+                run.fail(f"curation pass raised {type(e).__name__}: {e}")
+                run.attempted += 1
+            cpu, t1 = tree_cpu_s() - c0, time.perf_counter()
+            # the sampler's own spins are CPU of this process too
+            spun = sum(x for t, x in ctx.sampler.samples if t0 <= t <= t1)
+            slow = ctx.sampler.slowdown(t0, t1)
+            run.slowdown.setdefault("op", []).append(slow)
+            run.op_cpu_s.append(cpu - spun)
+            run.op_s.append(t1 - t0)
+            norm_cpu_ms.append((cpu - spun) * 1e3 / slow)
+    run.op_cpu_ms_norm = statistics.median(norm_cpu_ms)
+    run.peak_rss_mb = ctx.peak_rss_mb()
     for out in outs:
         _check_curate(out, oracles, inputs, n_docs, run)
 
