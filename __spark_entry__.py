@@ -1646,8 +1646,7 @@ def _x_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         if dense is not None:
             vocab, n_words, bm_idx = dense
             dense = (vocab.localCheckpoint(), n_words, bm_idx.localCheckpoint())
-        # False (not None) when ungated: reps skip the gate jobs too
-        eng._x35_index = cached = (bands, sets, dense or False)
+        eng._x35_index = cached = (bands, sets, dense)
         INDEX_BUILD_SECS["x35_minhash_index"] = round(
             _time.perf_counter() - _t0, 4
         )
@@ -1777,7 +1776,7 @@ def _x_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         if dense is not None:
             vocab, n_words, bm_idx = dense
             dense = (vocab.localCheckpoint(), n_words, bm_idx.localCheckpoint())
-        eng._x42_index = cached = (bands, sets, dense or False)
+        eng._x42_index = cached = (bands, sets, dense)
         INDEX_BUILD_SECS["x42_minhash_index"] = round(
             _time.perf_counter() - _t0, 4
         )

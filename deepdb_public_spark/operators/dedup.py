@@ -93,7 +93,9 @@ def capped_bucket_pairs(
     trades recall for a bounded plan, the right call at 100 TB.
 
     Shuffle profile: one window count per bucket (same key as the
-    bucket join) + the bucket equi-joins; never an uncapped B².
+    bucket join) + the bucket equi-joins; never an uncapped B². The
+    star branch (a row_number window, a sequence explode and a join)
+    is planned only when some bucket actually exceeds the cap.
 
     ``distinct=False`` skips the cross-bucket pair dedup: a pair
     agreeing on several buckets is emitted once per bucket. Callers
@@ -101,28 +103,67 @@ def capped_bucket_pairs(
     hamming verify) dedup after that filter instead — at sf0.1 the
     minhash candidate distinct removed only 4k of 226k rows while
     costing a full exchange of all of them (round 14, measured).
+    """
+    pairs, _n = _sized_bucket_pairs(
+        members, bucket_cols, max_bucket_size, chain_width
+    )
+    return pairs.distinct() if distinct else pairs
 
-    The sized table is persisted and filled EAGERLY: the small/big
-    self-joins reference it in four independent exchange branches of
-    one action, and with a lazy plan each branch re-evaluated the
-    window + the upstream signature subtree (round-14 profile: 4
-    stages x 9-16s executor time at sf0.1; eager fill cuts the
-    operator's candidate phase 2.5s -> 1.8s). Registered with
+
+def _sized_bucket_pairs(
+    members: DataFrame,
+    bucket_cols: list[str],
+    max_bucket_size: int,
+    chain_width: int,
+) -> tuple[DataFrame, int]:
+    """capped_bucket_pairs without the final distinct, plus the exact
+    number of pairs it emits: Σ C(B, 2) over buckets within the cap
+    and Σ_{r=1}^{B-1} min(w, r) over oversized ones (the member of id
+    rank r+1 points at min(w, r) hubs).
+
+    The sized table is persisted and filled EAGERLY: the pair
+    self-joins reference it in independent exchange branches of one
+    action, and with a lazy plan each branch re-evaluated the window
+    + the upstream signature subtree (round-14 profile: 4 stages x
+    9-16s executor time at sf0.1). The fill is ONE aggregate that
+    also returns the largest bucket and the pair count, so callers
+    gate on the candidate volume without counting the candidates
+    (another action over the join plan). Registered with
     release_cached() like every dedup intermediate.
     """
     from pyspark.sql.window import Window
 
     wb = Window.partitionBy(*bucket_cols)
-    sized = _persist(members.withColumn("__bsz", F.count(F.lit(1)).over(wb)))
-    sized.count()
-    small = sized.filter(F.col("__bsz") <= max_bucket_size)
-    pairs_small = (
+    sized = _persist(
+        members.select(
+            "*",
+            F.count(F.lit(1)).over(wb).alias("__bsz"),
+            F.min("id").over(wb).alias("__bmin"),
+        )
+    )
+    bsz = F.col("__bsz")
+    oversized = bsz > max_bucket_size
+    # star size: ranks 2..h+1 point at 1..h hubs, the rest at h each
+    h = F.least(F.lit(chain_width), bsz - 1)
+    star_size = (h * (h + 1) / 2).cast("long") + (bsz - 1 - h) * h
+    largest, small_twice, star = sized.agg(
+        F.max(bsz),
+        # C(B, 2) = B·(B-1)/2: every member adds B-1, halved once below
+        F.sum(F.when(~oversized, bsz - 1)),
+        # one row per oversized bucket (its min id) adds the star size
+        F.sum(F.when(oversized & (F.col("id") == F.col("__bmin")), star_size)),
+    ).first()
+    n_pairs = (small_twice or 0) // 2 + (star or 0)
+    small = sized.filter(~oversized)
+    pairs = (
         small.alias("x")
         .join(small.alias("y"), bucket_cols)
         .filter(F.col("x.id") < F.col("y.id"))
         .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
     )
-    big = sized.filter(F.col("__bsz") > max_bucket_size).withColumn(
+    if (largest or 0) <= max_bucket_size:
+        return pairs, n_pairs
+    big = sized.filter(oversized).withColumn(
         "__rn", F.row_number().over(wb.orderBy("id"))
     )
     # every member (rank > 1) points at hub ranks 1..min(w, rn-1); the
@@ -151,8 +192,7 @@ def capped_bucket_pairs(
         ),
         bucket_cols + ["__target"],
     ).select("id_a", "id_b")
-    pairs = pairs_small.unionByName(pairs_big)
-    return pairs.distinct() if distinct else pairs
+    return pairs.unionByName(pairs_big), n_pairs
 
 
 def duplicate_clusters(
@@ -945,9 +985,9 @@ def minhash_lsh_pairs(
     additional miss term, below).
 
     ``prefilter`` controls the signature-agreement prefilter:
-    ``None`` (default) is ADAPTIVE — the candidate set is persisted
-    and counted, and the prefilter only runs when candidates >=
-    ``prefilter_min_candidates`` (below that, the exact verify on the
+    ``None`` (default) is ADAPTIVE — the prefilter only runs when the
+    candidate count (derived from the bucket sizes, no extra job) is
+    >= ``prefilter_min_candidates`` (below that, the exact verify on the
     raw candidates is cheaper than the two signature joins the
     prefilter costs — the regime a small corpus sits in). ``False``
     disables it entirely, restoring the strict no-probabilistic-
@@ -1006,15 +1046,16 @@ def minhash_lsh_pairs(
     banded = sigs.select(
         "id", F.explode(band_keys(F.col("sig"), n_bands, rows_per_band)).alias("bk")
     ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    # distinct=False: a pair agreeing on several bands is emitted once
+    # no distinct here: a pair agreeing on several bands is emitted once
     # per band; the dedup moves BELOW the prefilter (or the verify) —
     # at sf0.1 the up-front distinct exchanged 226k rows to remove 4k
     # duplicates, while the post-prefilter set is ~1k rows (round 14).
-    # capped_bucket_pairs' eager sized fill also materializes the
-    # groups/sigs caches in one linear chain, so every later consumer
-    # is a cache read.
-    cand = capped_bucket_pairs(
-        banded, ["band", "key"], max_bucket_size, chain_width, distinct=False
+    # The eager sized fill also materializes the groups/sigs caches in
+    # one linear chain, so every later consumer is a cache read, and
+    # its aggregate returns the candidate count the adaptive gate
+    # below needs.
+    cand, n_cand = _sized_bucket_pairs(
+        banded, ["band", "key"], max_bucket_size, chain_width
     )
     # Signature prefilter before the exact verify: band buckets admit
     # any pair agreeing on ONE band, so on shingle-dense corpora the
@@ -1039,11 +1080,10 @@ def minhash_lsh_pairs(
     apply_prefilter = prefilter is not False and min_match > 0
     if apply_prefilter and prefilter is None:
         # Adaptive: the prefilter's two signature joins only amortize
-        # when the candidate set dwarfs the true-pair set. Persist the
-        # candidates (the verify join reuses them either way) and gate
-        # on their count.
-        cand = _persist(cand)
-        apply_prefilter = cand.count() >= prefilter_min_candidates
+        # when the candidate set dwarfs the true-pair set. The sizing
+        # aggregate already counted the candidates, so the gate costs
+        # no Spark job.
+        apply_prefilter = n_cand >= prefilter_min_candidates
     if apply_prefilter:
         sg = sigs.select("id", "sig")
         cand = (
@@ -1178,10 +1218,10 @@ def build_dense_index_verifier(
     per corpus index (round 9): ``(vocab_positions, n_words,
     index_bitmaps)``, or None when the index's shingle vocabulary is
     not dense-boundable (the 100 TB default — callers then use the
-    array verify). Probing code paths that re-run per batch
-    (streaming foreachBatch, bench reps) should build this next to
-    the index itself — localCheckpoint the two DataFrames — instead
-    of letting every probe re-derive vocab + bitmaps from scratch.
+    array verify). dedup_against_index never builds it itself: code
+    that probes an index repeatedly (streaming foreachBatch, bench
+    reps) builds it next to the index — localCheckpoint the two
+    DataFrames — and passes it to every probe.
 
     The vocab covers the INDEX side only; new batches encode over it
     with true-|A| sizes (_dense_bitmaps size_from_array), which keeps
@@ -1238,6 +1278,21 @@ def dedup_against_index(
     Oversized index buckets (boilerplate) are truncated to
     ``max_bucket_size`` members per (band, key) — same bounding policy
     as capped_bucket_pairs.
+
+    ``dense_index`` selects the verify path. The default (``None``,
+    or ``False``) verifies each candidate by intersecting its two
+    shingle arrays, and adds no Spark job of its own. A tuple from
+    ``build_dense_index_verifier`` switches to the broadcast bitmap
+    verify. Build that tuple ONCE per index, next to the index itself,
+    and pass it to every probe: building it costs a vocab distinct
+    count, an index count, a global row_number and a bitmap encode of
+    the index, which at batch scale cost more than the array verify
+    it replaces (x35's split of the sf0.01 corpus on 4 vCPUs: 24 Spark
+    jobs and 5.0 s per probe with a per-call build, 13 jobs and 2.2 s
+    on the array path, the same rows). The bitmap path pays off when
+    self-similar corpora make banding admit far more candidates than
+    true pairs (measured 95k candidates -> 89 pairs at sf0.1) and the
+    array-fetch joins would move GBs of shingle arrays.
     """
     new_bands, new_sets = build_minhash_index(
         new_df, text_col, id_col, n_hashes, n_bands, use_char_ngrams, ngram
@@ -1267,25 +1322,14 @@ def dedup_against_index(
         .select("new_id", "index_id")
         .distinct()
     )
-    # verify-step strategy (round 9, same gate as jaccard_pairs_exact):
-    # self-similar corpora make banding admit far more candidates than
-    # true pairs (measured 95k candidates -> 89 pairs at sf0.1), and
-    # the array-fetch verify join then moves GBs of shingle arrays.
-    # When the index's shingle vocabulary is dense-boundable, both
-    # sides bitmap-encode over the index's vocab (new-batch bitmaps
-    # keep their TRUE set size, so unmapped probe shingles only shrink
-    # the intersection they could never join — exact) and every
-    # candidate verifies via broadcast AND+popcount: the candidate set
-    # never shuffles to pick up arrays. Repeated probers (streaming
-    # foreachBatch, bench reps) pass a precomputed
-    # build_dense_index_verifier result via ``dense_index`` so the
-    # vocab scan + index bitmaps are paid once per index, not per
-    # batch. Above the gate (the 100 TB default: 5-gram vocabularies
-    # are unbounded) the array path runs unchanged.
-    if dense_index is None:
-        dense_index = build_dense_index_verifier(index_sets)
-    # dense_index=False forces the array path with NO per-call gate
-    # jobs (callers that already know the index isn't dense-boundable)
+    # verify-step strategy: with a verifier the caller built once per
+    # index (build_dense_index_verifier), both sides bitmap-encode over
+    # the index's vocab (new-batch bitmaps keep their TRUE set size, so
+    # unmapped probe shingles only shrink the intersection they could
+    # never join — exact) and every candidate verifies via broadcast
+    # AND+popcount: the candidate set never shuffles to pick up arrays.
+    # Without one (None, or its alias False) the candidates fetch
+    # their shingle arrays through two joins.
     if dense_index:
         vocab, n_words, bm_idx = dense_index
         bm_new = _dense_bitmaps(new_sets, vocab, n_words, size_from_array=True)

@@ -1186,6 +1186,13 @@ def _lloyd_fit_multi(
             ],
             axis=1,
         )
+        if not np.isfinite(grp_sums).all():
+            # a NULL sum (vectors shorter than dim) or a NaN/inf
+            # element would spread NaN into every centroid it touches
+            raise ValueError(
+                f"{op_name}: non-finite vector sums — every vector must "
+                f"hold {dim} finite values"
+            )
         new_cents: list[list[list[float]]] = []
         for s, (start, width, k) in enumerate(specs):
             s0 = 0 if start is None else start

@@ -1557,6 +1557,9 @@ class SPNEnsemble:
                         (r,) = m.aqp(local)
                         a = float(r["v"])
                     except (ValueError, ZeroDivisionError):
+                        # includes ModelPlaneUnsupported for a key the
+                        # anchor holds no operand mass for: that key
+                        # takes the group-independent AVG on purpose
                         a = a0
                     cache[pk] = a if _m.isfinite(a) else a0
                 out[k] = cache[pk]

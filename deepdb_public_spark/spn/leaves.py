@@ -201,18 +201,25 @@ class Leaf:
         values (misses are ignored, as the old dict lookup did), and
         the remaining-mass total is a sequential cumsum in ascending
         value order — the exact summation order of the old
-        sorted-items Python sum, so results are bit-identical."""
+        sorted-items Python sum, so results are bit-identical.
+
+        Repeated delta values are summed first: the fancy-index
+        subtraction below would otherwise keep only the last of them.
+        With counts >= 0 this equals removing them one after another,
+        because the zero clamp then applies once either way."""
         mass = self.probs * prior_n
-        vals = np.asarray(values, dtype=np.float64)
+        vals, inv = np.unique(
+            np.asarray(values, dtype=np.float64), return_inverse=True
+        )
+        cnts = np.zeros(len(vals))
+        np.add.at(cnts, inv, np.asarray(counts, dtype=np.float64))
         if len(vals) and len(self.values):
             idx = np.searchsorted(self.values, vals)
             idx = np.minimum(idx, len(self.values) - 1)
             hit = self.values[idx] == vals
             hit_idx = idx[hit]
             mass[hit_idx] = np.maximum(
-                0.0,
-                mass[hit_idx]
-                - np.asarray(counts, dtype=np.float64)[hit] * scale,
+                0.0, mass[hit_idx] - cnts[hit] * scale
             )
         null_mass = max(0.0, self.null_prob * prior_n - null_count * scale)
         keep = mass > 0

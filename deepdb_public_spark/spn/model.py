@@ -681,7 +681,15 @@ class SPNModel:
         denom = self.full_join_size * self._eval(
             self._notnull_cond(cond, operands), features
         )
-        return val / denom if denom > 0 else float("nan")
+        if denom <= 0:
+            # the model saw no not-null operand row in the range; the
+            # data may still hold some, so let the exact plane answer
+            # instead of returning NaN
+            raise ModelPlaneUnsupported(
+                "AVG over a range where the model holds no not-null "
+                f"mass for {[c for _t, c in operands]}"
+            )
+        return val / denom
 
     def _notnull_cond(self, cond, operands):
         """cond ∧ (every operand column IS NOT NULL)."""
